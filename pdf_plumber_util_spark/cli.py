@@ -21,7 +21,7 @@ import json
 import os
 import sys
 
-from .exceptions import EngineError
+from .exceptions import ConfigError, EngineError
 
 
 def _spark(cores: int | None = None):
@@ -92,21 +92,18 @@ def cmd_extract(args) -> int:
 def cmd_analyze(args) -> int:
     from pyspark.sql import functions as F
 
-    from .operators.boundaries import (
-        final_boundaries,
-        header_footer_candidates,
-    )
-    from .operators.spacing import contextual_spacing_rules
-    from .plans.io import read_lines_stage, render_report, write_stage
+    from .plans.extract import documents_from_lines
+    from .plans.io import LINES_STAGE_REQUIRED, read_lines_stage, render_report, write_stage
 
     spark = _spark(args.cores)
-    lines = read_lines_stage(spark, args.lines)
-    rules = contextual_spacing_rules(lines)
-    cands = header_footer_candidates(lines)
-    doc_bottom = lines.groupBy("url").agg(
-        F.max(F.col("bbox")["bottom"]).alias("doc_bottom")
-    )
-    bounds = final_boundaries(cands, doc_bottom)
+    cfg = _config(args)
+    # the boilerplate join reads the per-line link counts that
+    # `extract --drop-boilerplate` writes
+    required = LINES_STAGE_REQUIRED + (
+        ("line_chars", "line_link_chars", "line_words") if cfg.drop_boilerplate else ())
+    lines = read_lines_stage(spark, args.lines, required)
+    docs = documents_from_lines(lines, cfg)
+    rules, bounds = docs.rules, docs.bounds
     rules_path = write_stage(rules, args.output, args.basename, "rules")
 
     # K3 text report, driver-side from the tiny aggregates — but only for
@@ -155,8 +152,13 @@ def cmd_process(args) -> int:
 
     spark = _spark(args.cores)
     pages = _load_pages(spark, args.input)
-    body = extract_documents(pages, _config(args))
-    body_path = write_stage(body, args.output, args.basename, "body")
+    caches: list = []
+    body = extract_documents(pages, _config(args), cache_handle=caches)
+    try:
+        body_path = write_stage(body, args.output, args.basename, "body")
+    finally:
+        for c in caches:
+            c.unpersist()
     n = spark.read.parquet(body_path).count()
     print(json.dumps({"body": body_path, "docs": n}))
     return 0
@@ -394,10 +396,14 @@ def cmd_shards(args) -> int:
     docs = spark.read.parquet(args.input)
     if args.id_col != "doc_id":
         docs = docs.withColumnRenamed(args.id_col, "doc_id")
-    token_col = args.token_col if args.token_col in docs.columns else None
+    if args.token_col not in docs.columns:
+        raise ConfigError(
+            f"--token-col {args.token_col!r} is not a column of {args.input}",
+            field="token_col",
+            suggestion=f"Pick one of: {', '.join(docs.columns)}",
+        )
     plan = shuffle_shards(
-        docs.withColumn("_tok", F.coalesce(F.col(token_col), F.lit(0)))
-        if token_col else docs.withColumn("_tok", F.lit(0)),
+        docs.withColumn("_tok", F.coalesce(F.col(args.token_col), F.lit(0))),
         n_shards=args.n_shards, salt=args.salt, token_col="_tok",
     )
     out = docs.join(plan.select("doc_id", "shard", "pos", "sort_key"),

@@ -15,24 +15,18 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators import (
-    assemble_lines,
     assign_line_ids,
-    body_text,
-    build_segments,
     classify_gaps,
     contextual_spacing_rules,
-    drop_blank_lines,
-    final_boundaries,
-    form_blocks,
     header_footer_candidates,
     page_base_spacing,
 )
-from .sources.tables import WORDS_FROM_LINEITEM_SQL, load_table, words_from_lineitem
-from .sources.tokenizer import page_dims
+from .plans.extract import documents_from_lines, lines_from_words
+from .sources.tables import WORDS_FROM_LINEITEM_SQL, words_from_lineitem
 
 # --------------------------------------------------------------------------
 # shared SQL fragments (banker's rounding, mirrors functions/rounding.py)
@@ -70,16 +64,8 @@ _LINED_FRAGMENT = """
 # the C1/C3 sessionization + segment + line CTE chain used by most oracles
 _LINES_SQL = (
     WORDS_FROM_LINEITEM_SQL
-    + f"""
-, lined AS (
-  SELECT w.*, CAST(COALESCE(SUM(CASE WHEN w.top - w.lag_top > 3.0 THEN 1 ELSE 0 END)
-    OVER (PARTITION BY w.url, w.page ORDER BY w.top, w.word_idx
-          ROWS UNBOUNDED PRECEDING), 0) AS BIGINT) AS line_id
-  FROM (
-    SELECT *, LAG(top) OVER (PARTITION BY url, page ORDER BY top, word_idx) AS lag_top
-    FROM words
-  ) w
-), segged AS (
+    + _LINED_FRAGMENT
+    + f""", segged AS (
   SELECT *, SUM(is_new_seg) OVER (PARTITION BY url, page, line_id
       ORDER BY x0, word_idx ROWS UNBOUNDED PRECEDING) AS seg_id
   FROM (
@@ -301,9 +287,7 @@ def _lines_df(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     hit = _SHARED_LINES.get(key)
     if hit is not None:
         return hit
-    from .operators import assign_line_ids_window
-
-    # Two-level partitioning (plans/extract.py scale note): the word-sized
+    # Two-level partitioning (plans/extract.py module note): the word-sized
     # stage keys on (url, page) — the C1 window's own exchange — so a
     # multi-page document's heavy window work spreads across pages instead
     # of serializing in one url task; then ONE line-sized exchange re-keys
@@ -312,14 +296,11 @@ def _lines_df(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     # url-co-partitioned and exchange-free. Keying the *words* on url
     # (round-3 first cut) capped parallelism at the corpus's url count
     # (50 at sf0.1) and measured 3.4-4.5 s vs 2.8 s for this shape.
-    words = words_from_lineitem(spark, sf_dir)
-    wl = assign_line_ids_window(words)
-    segs = build_segments(wl)
-    # proportional columns pruned from the cached fixture (only
-    # q_line_text reads them, and it rebuilds from segs directly)
-    lines = drop_blank_lines(
-        assemble_lines(wl, segs, page_dims(words), include_proportional=False)
-    ).repartition(F.col("url")).persist()
+    # Proportional columns are pruned from the cached fixture (only
+    # q_line_text reads them, and it rebuilds from segs directly).
+    lines, segs = lines_from_words(words_from_lineitem(spark, sf_dir),
+                                   include_proportional=False)
+    lines = lines.repartition(F.col("url")).persist()
     _SHARED_LINES[key] = (lines, segs)
     return lines, segs
 
@@ -346,11 +327,7 @@ def q_word_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C3/C4/O6: segment runs, text concat, banker-rounded size."""
-    from .operators import assign_line_ids_window
-
-    words = words_from_lineitem(spark, sf_dir)
-    wl = assign_line_ids_window(words)
-    segs = build_segments(wl)
+    _, segs = _lines_df(spark, sf_dir)
     return segs.select(
         "url", "page", "line_id",
         F.col("seg_id").cast("long").alias("seg_id"),
@@ -421,8 +398,7 @@ def q_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C6/W3: block sessionization with recomputed inter-block gaps."""
     lines, _ = _lines_df(spark, sf_dir)
-    rules = contextual_spacing_rules(lines)
-    blocks = form_blocks(lines, rules)
+    blocks = documents_from_lines(lines).blocks
     return blocks.select(
         "url", "page", F.col("block_id").cast("long").alias("block_id"),
         "text", F.col("n_lines").cast("long").alias("n_lines"),
@@ -451,24 +427,13 @@ def q_hf_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A11/H5: final per-document content boundaries."""
     lines, _ = _lines_df(spark, sf_dir)
-    cands = header_footer_candidates(lines)
-    doc_bottom = lines.groupBy("url").agg(
-        F.max(F.col("bbox")["bottom"]).alias("doc_bottom")
-    )
-    return final_boundaries(cands, doc_bottom)
+    return documents_from_lines(lines).bounds
 
 
 def q_body_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: end-to-end main-content text per url."""
     lines, _ = _lines_df(spark, sf_dir)
-    rules = contextual_spacing_rules(lines)
-    blocks = form_blocks(lines, rules)
-    cands = header_footer_candidates(lines)
-    doc_bottom = lines.groupBy("url").agg(
-        F.max(F.col("bbox")["bottom"]).alias("doc_bottom")
-    )
-    bounds = final_boundaries(cands, doc_bottom)
-    return body_text(blocks, bounds).select(
+    return documents_from_lines(lines).body.select(
         "url", "body_text",
         F.col("n_blocks_kept").cast("long").alias("n_blocks_kept"),
         F.col("n_blocks_dropped").cast("long").alias("n_blocks_dropped"),

@@ -521,23 +521,14 @@ def q_h4_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_method_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2+C7: positional full-outer zip of the default (y_tol=3) lines
     against the scanner-variant clustering (y_tol=2, C7)."""
-    from .operators import (
-        assemble_lines,
-        assign_line_ids_window,
-        build_segments,
-        drop_blank_lines,
-    )
+    from dataclasses import replace
+
+    from .config import DEFAULT
     from .operators.stats import method_comparison_zip
-    from .sources.tokenizer import page_dims
+    from .plans.extract import lines_from_words
 
     words = words_from_lineitem(spark, sf_dir)
-    mk = lambda tol: drop_blank_lines(
-        assemble_lines(
-            assign_line_ids_window(words, tol),
-            build_segments(assign_line_ids_window(words, tol)),
-            page_dims(words),
-        )
-    )
+    mk = lambda tol: lines_from_words(words, replace(DEFAULT, y_tolerance=tol))[0]
     return method_comparison_zip(mk(3.0), mk(2.0))
 
 
@@ -2064,14 +2055,15 @@ def q_block_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the HTML tokenizer (which emits real is_link flags, tested in
     tests/test_webtext.py)."""
     from .contract import _lines_df
-    from .operators import assign_line_ids_window, contextual_spacing_rules, form_blocks
+    from .operators import assign_line_ids_window
     from .operators.webtext import block_boilerplate
+    from .plans.extract import documents_from_lines
 
     words = words_from_lineitem(spark, sf_dir).withColumn(
         "is_link", F.col("fontname") == "Helvetica"
     )
     lines, _ = _lines_df(spark, sf_dir)
-    blocks = form_blocks(lines, contextual_spacing_rules(lines))
+    blocks = documents_from_lines(lines).blocks
     out = block_boilerplate(assign_line_ids_window(words), lines, blocks)
     return out.select(
         "url", "page", F.col("block_id").cast("long").alias("block_id"),

@@ -106,16 +106,6 @@ def word_y_distances(words: DataFrame) -> DataFrame:
     )
 
 
-def zone_filter(lines: DataFrame, zone: str, header_zone_pt: float = 90.0,
-                footer_zone_in: float = 1.0) -> DataFrame:
-    """P3 (analyzer.py:487-529): header/footer zone predicates."""
-    if zone == "header":
-        return lines.filter(F.col("bbox")["top"] < header_zone_pt)
-    return lines.filter(
-        F.col("bbox")["bottom"] > F.col("page_height") - footer_zone_in * 72.0
-    )
-
-
 def precision_reduce(df: DataFrame, decimals: int = 2) -> DataFrame:
     """P7 (scripts/precision_analysis.py:28-44): banker-round all double
     columns to k decimals."""

@@ -1,27 +1,42 @@
 """End-to-end extraction plans (the reference's extract/analyze/process CLI
 paths, SURVEY.md §3, re-expressed as one Spark job).
 
-Scale design (north_rule):
-  * ONE data-sized shuffle for the whole per-document pipeline: the scan +
-    tokenizer UDF run map-side, then the word stream is hash-partitioned
-    by **url** (exactly the north-rule's url-hash partitioning). Every
-    downstream operator is keyed with a url prefix, so with
-    `requireAllClusterKeysForCoPartition=false` (session default) NOTHING
-    below the word exchange shuffles line-sized data again: the (url,
-    page) windows, the segment/line aggregations, the rules aggregation,
-    the lines<->rules join on (url, size) (both sides url-co-partitioned),
-    the block windows/aggregates, the boundary voting, and the body
-    assembly all reuse the one partitioning (verified by
-    tests/test_plan_shape.py: one Exchange in the lines plan, zero
-    exchanges in the blocks path above the lines cache). Measured at
-    8000 html docs / local[32]: 14.9s -> 12.7s end-to-end vs the
-    round-2 (url, page)-keyed exchange, and at cluster scale it removes
-    two corpus-sized shuffles (the rules join re-shuffle and the
-    post-join window re-shuffle).
-  * Spark 4 note: Generate (posexplode) and FlatMapGroupsInPandas both
-    erase outputPartitioning, so pre-repartitioning pages buys nothing;
-    the C1 window variant (no Python stage) is the default, and the
-    exact-anchor applyInPandas variant remains for pathological drift.
+This is the only module that composes the extraction layers. Two
+functions hold the chain, and every caller (extract_lines,
+extract_documents, the contract queries, the CLI) builds on them:
+
+  * ``lines_from_words(words, cfg)``: C1 window line ids -> segments ->
+    lines -> blank filter. Returns the lines and the segments.
+  * ``documents_from_lines(flines, cfg)``: spacing rules -> blocks ->
+    header/footer candidates -> doc-level aggregate -> boundaries -> the
+    opt-in boilerplate join -> body. Returns ``Documents``: rules,
+    blocks, doc metrics, bounds and body; each caller selects from it.
+
+Partitioning is the caller's choice: neither function repartitions, and
+the output does not depend on the shape the caller picks
+(tests/test_plan_shape.py):
+  * html (extract_lines, extract_documents) is url-first: ONE data-sized
+    shuffle, the word stream hash-partitioned by **url** right after the
+    map-side scan + tokenizer UDF. Every downstream key carries the url
+    prefix, so with `requireAllClusterKeysForCoPartition=false` (session
+    default) nothing below the word exchange shuffles again: windows,
+    segment/line aggregates, the lines<->rules join, block windows,
+    boundary voting and body assembly all reuse it. Measured at 8000
+    html docs / local[32]: 14.9s -> 12.7s vs a (url, page)-keyed word
+    exchange, and at cluster scale it removes two corpus-sized shuffles.
+  * the contract (contract._lines_df) is two-level: words keyed on (url,
+    page) by the C1 window's own exchange, then the lines re-keyed to url
+    before the persist. Its few giant multi-page documents would cap a
+    url-first word stage at the url count (measured reasons in
+    _lines_df's comment).
+  Picking one shape for both needs per-layer measurements at both
+  document mixes.
+
+Scale notes:
+  * Spark 4: Generate (posexplode) and FlatMapGroupsInPandas both erase
+    outputPartitioning, so pre-repartitioning pages buys nothing; the C1
+    window variant (no Python stage) is the default, and the exact-anchor
+    applyInPandas variant remains for pathological drift.
   * Skew: the unit of sequential work is one document (url-hash
     partitioning spreads hosts; partition_pages adds explicit salting
     for adversarial hosts upstream of the tokenizer). A giant single
@@ -34,6 +49,8 @@ Scale design (north_rule):
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -87,21 +104,89 @@ def extract_lines(pages: DataFrame, cfg: EngineConfig = DEFAULT,
     num_partitions: opt-in salted input rebalance (see partition_pages)."""
     if num_partitions:
         pages = partition_pages(pages, num_partitions)
-    words = _url_partitioned_words(pages)
+    lines, _ = lines_from_words(tokenize_pages(pages).repartition(F.col("url")), cfg)
+    return lines
+
+
+def lines_from_words(words: DataFrame, cfg: EngineConfig = DEFAULT,
+                     include_proportional: bool = True) -> tuple[DataFrame, DataFrame]:
+    """words -> (blank-filtered lines, segments): the C1 window line ids,
+    segment runs, line assembly and the blank-line filter. Keeps the
+    partitioning of ``words`` (module docstring).
+
+    Under ``cfg.drop_boilerplate`` the per-line char/link/word counts ride
+    the segment and line aggregates (three extra sums, zero added
+    shuffles or word passes) into the lines, where the boilerplate
+    classifier reads them; words without ``is_link`` count no link chars.
+    """
     wl = assign_line_ids_window(words, cfg.y_tolerance)
-    segs = build_segments(wl)
-    lines = assemble_lines(wl, segs, page_dims(words))
-    return drop_blank_lines(lines)
+    if cfg.drop_boilerplate and "is_link" not in wl.columns:
+        wl = wl.withColumn("is_link", F.lit(False))
+    segs = build_segments(wl, with_link_stats=cfg.drop_boilerplate)
+    lines = assemble_lines(wl, segs, page_dims(words),
+                           include_proportional=include_proportional)
+    return drop_blank_lines(lines), segs
 
 
-def _url_partitioned_words(pages: DataFrame) -> DataFrame:
-    """Tokenize, then install THE pipeline exchange: url-hash partitioning
-    of the word stream (module docstring: everything downstream reuses
-    it). The explicit repartition replaces the (url, page) exchange the
-    first window would otherwise insert — same rows moved, but the
-    coarser key lets every (url, ...)-keyed join below run
-    co-partitioned."""
-    return tokenize_pages(pages).repartition(F.col("url"))
+class Documents(NamedTuple):
+    """documents_from_lines' outputs."""
+
+    rules: DataFrame  # contextual_spacing_rules
+    blocks: DataFrame  # form_blocks (+ _boilerplate under drop_boilerplate)
+    doc_metrics: DataFrame  # url, doc_bottom, n_lines, n_pages
+    bounds: DataFrame  # url, header_bottom, footer_top
+    body: DataFrame  # body_text: url, body_text and its block/char counts
+
+
+def documents_from_lines(flines: DataFrame, cfg: EngineConfig = DEFAULT) -> Documents:
+    """Blank-filtered lines -> rules -> blocks -> header/footer candidates
+    -> boundaries -> body (the reference's analyze + process tail). Every
+    key carries the url prefix, so over url-partitioned lines the tail
+    adds no exchange. ``flines`` is read several times: persist it first
+    when it is computed."""
+    rules = contextual_spacing_rules(
+        flines,
+        gap_rounding=cfg.gap_rounding,
+        lo_mult=cfg.line_spacing_lo_mult,
+        hi_mult=cfg.line_spacing_hi_mult,
+        para_mult=cfg.para_spacing_mult,
+    )
+    blocks = form_blocks(flines, rules)
+    cands = header_footer_candidates(
+        flines,
+        header_zone_pt=cfg.header_zone_pt,
+        footer_zone_in=cfg.footer_zone_inches,
+        large_mult=cfg.large_gap_mult,
+    )
+    # one doc-level aggregation serves the boundary default AND the
+    # north-rule parse metrics (callers that select only the bounds get
+    # the unused aggregates pruned)
+    doc_metrics = flines.groupBy("url").agg(
+        F.max(F.col("bbox")["bottom"]).alias("doc_bottom"),
+        F.count("*").alias("n_lines"),
+        F.countDistinct("page").alias("n_pages"),
+    )
+    bounds = final_boundaries(cands, doc_metrics.select("url", "doc_bottom"))
+    if cfg.drop_boilerplate:
+        from ..operators.webtext import block_boilerplate
+
+        # flines carries the line_link_stats columns (lines_from_words),
+        # so no word re-derivation happens here
+        bp = block_boilerplate(
+            None, flines, blocks,
+            max_link_density=cfg.max_link_density,
+            min_text_density=cfg.min_text_density,
+        )
+        blocks = blocks.join(
+            bp.select(
+                "url", "page", "block_id",
+                F.col("is_boilerplate").alias("_boilerplate"),
+            ),
+            ["url", "page", "block_id"],
+            "left",
+        )
+    body = body_text(blocks, bounds, max_body_chars=cfg.max_body_chars)
+    return Documents(rules, blocks, doc_metrics, bounds, body)
 
 
 def doc_stats(lines: DataFrame, segments: DataFrame) -> DataFrame:
@@ -145,72 +230,23 @@ def extract_documents(pages: DataFrame, cfg: EngineConfig = DEFAULT,
     path: extract -> rules -> blocks -> boundaries -> main content.
 
     num_partitions: opt-in salted input rebalance (see partition_pages).
-    cache_handle: the internal lines cache is appended to this list so
-    repeated callers (the streaming foreachBatch loop) can unpersist it
-    after their action; one-shot callers may ignore it (the cache dies
-    with the session)."""
+    cache_handle: the plan persists its lines (the reference's
+    _lines.json checkpoint; the tail reads them several times) and
+    appends that cache to this list. The caller owns it: unpersist it
+    once the returned frame has been written. Without a handle the cache
+    lives until the session ends, and a later call over the same input
+    silently reuses it."""
     if num_partitions:
         pages = partition_pages(pages, num_partitions)
-    words = _url_partitioned_words(pages)
-    wl = assign_line_ids_window(words, cfg.y_tolerance)
-    if cfg.drop_boilerplate and "is_link" not in wl.columns:
-        wl = wl.withColumn("is_link", F.lit(False))
-    # drop_boilerplate: the per-line char/link/word counts ride the
-    # EXISTING segment and line aggregates (three extra sums, zero added
-    # shuffles or word passes) and land in the persisted lines, where the
-    # boilerplate classifier reads them for free
-    segs = build_segments(wl, with_link_stats=cfg.drop_boilerplate)
     # proportional columns pruned at the source: nothing downstream of
     # the process path reads them, and persist() would otherwise force
     # their computation (Catalyst cannot prune through a cache)
-    lines = assemble_lines(wl, segs, page_dims(words), include_proportional=False)
-    # analysis consumes lines multiple times — materialize once (the
-    # reference's _lines.json checkpoint between extract and analyze)
-    flines = drop_blank_lines(lines).persist()
+    flines, _ = lines_from_words(tokenize_pages(pages).repartition(F.col("url")), cfg,
+                                 include_proportional=False)
+    flines = flines.persist()
     if cache_handle is not None:
         cache_handle.append(flines)
-
-    rules = contextual_spacing_rules(
-        flines,
-        gap_rounding=cfg.gap_rounding,
-        lo_mult=cfg.line_spacing_lo_mult,
-        hi_mult=cfg.line_spacing_hi_mult,
-        para_mult=cfg.para_spacing_mult,
-    )
-    blocks = form_blocks(flines, rules)
-    cands = header_footer_candidates(
-        flines,
-        header_zone_pt=cfg.header_zone_pt,
-        footer_zone_in=cfg.footer_zone_inches,
-        large_mult=cfg.large_gap_mult,
-    )
-    # one doc-level aggregation serves the boundary default AND the
-    # north-rule parse metrics (one job fewer on the analysis tail)
-    doc_stats_df = flines.groupBy("url").agg(
-        F.max(F.col("bbox")["bottom"]).alias("doc_bottom"),
-        F.count("*").alias("n_lines"),
-        F.countDistinct("page").alias("n_pages"),
-    )
-    bounds = final_boundaries(cands, doc_stats_df.select("url", "doc_bottom"))
-    if cfg.drop_boilerplate:
-        from ..operators.webtext import block_boilerplate
-
-        # flines carries the line_link_stats columns (attached above), so
-        # no word re-derivation happens here
-        bp = block_boilerplate(
-            None, flines, blocks,
-            max_link_density=cfg.max_link_density,
-            min_text_density=cfg.min_text_density,
-        )
-        blocks = blocks.join(
-            bp.select(
-                "url", "page", "block_id",
-                F.col("is_boilerplate").alias("_boilerplate"),
-            ),
-            ["url", "page", "block_id"],
-            "left",
-        )
-    body = body_text(blocks, bounds, max_body_chars=cfg.max_body_chars)
-    return body.join(bounds, "url", "left").join(
-        doc_stats_df.drop("doc_bottom"), "url", "left"
+    docs = documents_from_lines(flines, cfg)
+    return docs.body.join(docs.bounds, "url", "left").join(
+        docs.doc_metrics.drop("doc_bottom"), "url", "left"
     )

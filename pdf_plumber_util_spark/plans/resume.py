@@ -138,6 +138,7 @@ def run_resumable(pages: DataFrame, spark: SparkSession, out_dir: str,
     """Resumable end-to-end run: skip committed buckets, land every
     remaining bucket in ONE dynamic-partition-overwrite job, audit the
     landed files, publish one sidecar marker per bucket."""
+    from ..config import DEFAULT
     from .extract import extract_documents
 
     sidecar_dir = f"{out_dir}/{SIDECAR}"
@@ -151,7 +152,11 @@ def run_resumable(pages: DataFrame, spark: SparkSession, out_dir: str,
         int(r[BUCKET_COL]): r["n_in"]
         for r in todo.groupBy(BUCKET_COL).agg(F.count("*").alias("n_in")).collect()
     }
-    docs = with_bucket(extract_documents(todo.drop(BUCKET_COL)), n_buckets)
+    caches: list = []
+    docs = with_bucket(
+        extract_documents(todo.drop(BUCKET_COL), cfg or DEFAULT, cache_handle=caches),
+        n_buckets,
+    )
 
     t0 = time.time()
     prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
@@ -160,6 +165,9 @@ def run_resumable(pages: DataFrame, spark: SparkSession, out_dir: str,
         docs.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(out_dir)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+        # the audit below re-reads the landed files, not the lines cache
+        for c in caches:
+            c.unpersist()
     wall = round(time.time() - t0, 3)
 
     # audit: read back what actually landed, then publish

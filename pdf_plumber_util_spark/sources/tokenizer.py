@@ -1,9 +1,8 @@
 """Tokenizer: pages(html) -> words DataFrame (the S1 analog).
 
 The single mandatory pandas/Arrow UDF of the engine (input_hint: vectorized
-UDFs only). The default path is a flat ``mapInPandas`` (one Arrow batch of
-plain columns per input batch); the ``array<struct>`` pandas_udf +
-posexplode variant is kept for fixture paths.
+UDFs only): a flat ``mapInPandas`` (one Arrow batch of plain columns per
+input batch).
 
 Partitioning note: ``mapInPandas`` ERASES output partitioning in Spark 4,
 so nothing placed before tokenization feeds the downstream windows — the
@@ -20,7 +19,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     BooleanType,
     DoubleType,
     IntegerType,
@@ -29,8 +27,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-
-from .render import layout_html
 
 WORD_STRUCT = StructType(
     [
@@ -52,11 +48,6 @@ WORD_STRUCT = StructType(
 WORD_SCHEMA = StructType(
     [StructField("url", StringType())] + list(WORD_STRUCT.fields)
 )
-
-
-@F.pandas_udf(ArrayType(WORD_STRUCT))
-def _tokenize_udf(html: pd.Series) -> pd.Series:
-    return html.map(lambda b: layout_html(b.decode("utf-8", "replace")))
 
 
 def _flat_tokenize(batches):
@@ -88,23 +79,11 @@ def tokenize_pages(pages: DataFrame) -> DataFrame:
     page_width/page_height (constant for the synthetic renderer).
 
     Flat mapInPandas (one Arrow batch of plain columns per input batch):
-    ~2-3x the throughput of the array<struct> pandas_udf + posexplode
-    variant (kept above as `tokenize_pages_struct` for fixture paths) —
-    nested struct assembly and the JVM-side Generate both disappear.
+    ~2-3x the throughput of an array<struct> pandas_udf + posexplode
+    variant — nested struct assembly and the JVM-side Generate both
+    disappear.
     """
     words = pages.select("url", "html").mapInPandas(_flat_tokenize, WORD_SCHEMA)
-    return words.withColumn("page_width", F.lit(612.0)).withColumn(
-        "page_height", F.lit(792.0)
-    )
-
-
-def tokenize_pages_struct(pages: DataFrame) -> DataFrame:
-    """The array<struct> + posexplode variant (S1's per-page word-list
-    shape, cf. extractor.py:67,134-139). Same output as tokenize_pages."""
-    words = (
-        pages.select("url", F.posexplode(_tokenize_udf("html")).alias("_pos", "w"))
-        .select("url", "w.*")
-    )
     return words.withColumn("page_width", F.lit(612.0)).withColumn(
         "page_height", F.lit(792.0)
     )

@@ -34,6 +34,11 @@ def test_cli_extract_analyze_scan_roundtrip(spark, tmp_path, capsys):
     assert spark.read.parquet(arts["rules"]).count() > 0
     report = open(arts["report"]).read()
     assert "Contextual spacing rules" in report and "Content window" in report
+    # analyze honours its config: the boilerplate join needs the per-line
+    # link counts that only `extract --drop-boilerplate` writes
+    assert cli.main(["analyze", "--lines", lines_dir, "--output", out,
+                     "--drop-boilerplate", "--cores", "8"]) == 2
+    assert "line_link_chars" in capsys.readouterr().err
 
     assert cli.main(["scan", "--lines", lines_dir, "--output", out,
                      "--pattern-set", "section_patterns", "--cores", "8"]) == 0
@@ -43,10 +48,16 @@ def test_cli_extract_analyze_scan_roundtrip(spark, tmp_path, capsys):
 
 
 def test_cli_process(spark, tmp_path, capsys):
+    from pdf_plumber_util_spark.contract import clear_shared_lines
+
     pages = _write_pages(spark, tmp_path)
     out = str(tmp_path / "out2")
+    clear_shared_lines()
+    spark.catalog.clearCache()
     assert cli.main(["process", "--input", pages, "--output", out,
                      "--cores", "8"]) == 0
+    # process owns the lines cache of its extraction and releases it
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
     arts = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert arts["docs"] == 6
     body = spark.read.parquet(arts["body"])
@@ -363,3 +374,12 @@ def test_cli_shards_layout_and_summary(spark, tmp_path, capsys):
         assert r.sort_key == key and r.shard == int(key[:8], 16) % 4
     for shard, g in written.groupby("shard"):
         assert sorted(g["pos"]) == list(range(1, len(g) + 1))
+
+    # a --token-col the input lacks is an error naming the column, not a
+    # silent 0-token layout
+    assert cli.main(["shards", "--input", docs_path, "--output", out,
+                     "--basename", "e", "--n-shards", "4",
+                     "--token-col", "n_tokens", "--cores", "8"]) == 2
+    err = capsys.readouterr().err
+    assert "'n_tokens'" in err and "n_chars" in err
+    assert not os.path.exists(os.path.join(out, "e_shards"))

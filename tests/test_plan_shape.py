@@ -314,6 +314,38 @@ def test_shared_fixture_two_level_partitioning(spark, sf_dir):
         spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
 
 
+def test_partitioning_does_not_change_documents(spark):
+    """The shared chain (lines_from_words -> documents_from_lines) keeps
+    the caller's partitioning, and the documents do not depend on it:
+    url-first words (extract_documents) and two-level keying, (url, page)
+    words with the lines re-keyed to url after the C1 window
+    (contract._lines_df), give identical rows. This is what lets the two
+    callers keep different shapes."""
+    from pdf_plumber_util_spark.plans.extract import (
+        documents_from_lines,
+        lines_from_words,
+    )
+
+    words = tokenize_pages(synth_pages(spark, 8)).persist()
+    try:
+        url_first, _ = lines_from_words(
+            words.repartition(F.col("url")), include_proportional=False)
+        two_level, _ = lines_from_words(words, include_proportional=False)
+        two_level = two_level.repartition(F.col("url"))
+        keys = [re.findall(r"Exchange hashpartitioning\(([^)]*)\)", _plan(df))
+                for df in (url_first, two_level)]
+        assert all("page" not in k for k in keys[0]), keys
+        assert any("page" in k for k in keys[1]), keys
+        cols = ["url", "body_text", "n_blocks_kept", "n_blocks_dropped",
+                "chars_extracted"]
+        a, b = (sorted(documents_from_lines(lines).body.select(*cols).collect())
+                for lines in (url_first, two_level))
+    finally:
+        words.unpersist()
+    assert len(a) == 8
+    assert a == b
+
+
 def test_repeated_spans_reuses_url_partitioning(spark):
     """h6 repeated-span hashing: every key (url,span_hash / url) carries
     the url prefix, so over url-partitioned lines — with broadcasts

@@ -6,6 +6,7 @@ import os
 
 import pytest
 
+from pdf_plumber_util_spark.contract import clear_shared_lines
 from pdf_plumber_util_spark.plans.resume import (
     BUCKET_COL,
     committed_partitions,
@@ -15,11 +16,19 @@ from pdf_plumber_util_spark.plans.resume import (
 from pdf_plumber_util_spark.sources.pages import synth_pages
 
 
+def _persisted(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
 def test_resume_skips_committed(spark, tmp_path):
     out = str(tmp_path / "out")
     pages = synth_pages(spark, 12)
+    clear_shared_lines()
+    spark.catalog.clearCache()
 
     metas1 = run_resumable(pages, spark, out, n_buckets=4)
+    # run_resumable owns the lines cache of its extraction and releases it
+    assert _persisted(spark) == 0
     assert len(metas1) >= 2
     done1 = committed_partitions(spark, os.path.join(out, "_sidecar"))
     assert sorted(done1) == sorted(m[BUCKET_COL] for m in metas1)
@@ -42,6 +51,7 @@ def test_resume_skips_committed(spark, tmp_path):
 
     # resume: only the missing buckets are reprocessed
     metas2 = run_resumable(pages, spark, out, n_buckets=4)
+    assert _persisted(spark) == 0
     redone = sorted(m[BUCKET_COL] for m in metas2)
     assert kept_bucket not in redone
     assert sorted(redone + [kept_bucket]) == sorted(done1)
